@@ -138,12 +138,16 @@ def upsert_cursor(
     or Delta MERGE on a real deployment).
     """
     spark = cursors_df.sparkSession
-    # the timestamp crosses as a wall-clock string parsed JVM-side
-    # (session tz) — a datetime object would convert via the process tz
-    new_row = spark.createDataFrame(
-        [(shipper_name, wall_string(updated_at), shipped_id)],
-        "name string, updated_at string, shipped_id string",
-    ).withColumn("updated_at", to_ts("updated_at"))
+    # the row is a JVM literal over a one-row Range: a local-list
+    # createDataFrame would go through a PythonRDD and fork Python
+    # workers on every cursor write.  The timestamp crosses as a
+    # wall-clock string parsed JVM-side (session tz) — a datetime object
+    # would convert via the process tz
+    new_row = spark.range(0, 1, 1, 1).select(
+        F.lit(shipper_name).alias("name"),
+        to_ts(F.lit(wall_string(updated_at))).alias("updated_at"),
+        F.lit(shipped_id).alias("shipped_id"),
+    )
     kept = cursors_df.filter(F.col("name") != F.lit(shipper_name))
     return kept.unionByName(new_row)
 

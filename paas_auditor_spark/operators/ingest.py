@@ -93,8 +93,9 @@ def ingest_watermark(
     """Next-fetch start time: max(created_at) − overlap, epoch when empty.
 
     Parity with reference cf_audit_event_collector.go:36,92-104 including
-    the year<1970 guard (T2).  A single MAX aggregate — parquet footer
-    statistics make this a metadata-only scan under AQE.
+    the year<1970 guard (T2).  A single MAX aggregate; over parquet it
+    scans the ``created_at`` column of every file (column pruning only —
+    Spark's parquet source does not answer MAX from footer statistics).
     """
     from paas_auditor_spark.functions.timecross import parse_wall, ts_string
 

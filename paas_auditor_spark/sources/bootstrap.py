@@ -21,6 +21,8 @@ from paas_auditor_spark.schemas import CF_AUDIT_EVENT, SHIPPER_CURSOR
 
 EVENTS_TABLE = "cf_audit_events"
 CURSORS_TABLE = "shipper_cursors"
+# the pinned schema of each table; readers pass it instead of inferring
+TABLE_SCHEMAS = {EVENTS_TABLE: CF_AUDIT_EVENT, CURSORS_TABLE: SHIPPER_CURSOR}
 
 
 def _table_path(warehouse_dir: str, name: str) -> str:
@@ -41,22 +43,24 @@ def init_warehouse(spark: SparkSession, warehouse_dir: str) -> dict[str, str]:
     """Apply all startup DDL (reference store.go:55-71): both tables exist
     with pinned schemas afterwards, whether or not they did before."""
     return {
-        EVENTS_TABLE: init_table(
-            spark, warehouse_dir, EVENTS_TABLE, CF_AUDIT_EVENT
-        ),
-        CURSORS_TABLE: init_table(
-            spark, warehouse_dir, CURSORS_TABLE, SHIPPER_CURSOR
-        ),
+        name: init_table(spark, warehouse_dir, name, schema)
+        for name, schema in TABLE_SCHEMAS.items()
     }
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(_table_path(warehouse_dir, name))
+    """Read a table with its pinned schema: no footer-inference job, and
+    the same column set whatever files the table holds — a column absent
+    from older files reads as NULL there."""
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(
+        _table_path(warehouse_dir, name)
+    )
 
 
 __all__ = [
     "CURSORS_TABLE",
     "EVENTS_TABLE",
+    "TABLE_SCHEMAS",
     "init_table",
     "init_warehouse",
     "read_table",

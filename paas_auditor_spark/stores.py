@@ -27,6 +27,15 @@ transaction per partition, ON CONFLICT DO NOTHING — W1 under task
 retries).  On a 1000-executor cluster the wide data path (fetch →
 normalize → validate → dedup) stays distributed; only the bounded
 cursor/ship path touches the driver, same as the parquet store.
+
+**No per-tick job that moves no data.**  ``ParquetStore`` reads its tables
+with the schemas ``init_warehouse`` pinned (``bootstrap.read_table``), so
+no read runs a footer-inference job, and builds the new cursor row as a JVM
+literal, so a cursor write forks no Python worker.  The one Python-worker
+job left on the tick path is ``pages_to_dataframe`` (the collector's page
+envelopes → DataFrame): routing it through Arrow cut ``collector.self_s``
+by about 0.2 s but raised the JVM's peak RSS by 100–150 MB, because
+Arrow's off-heap allocator starts up, so it stays on the plain route.
 """
 
 from __future__ import annotations
@@ -51,6 +60,7 @@ from paas_auditor_spark.sources.bootstrap import (
     CURSORS_TABLE,
     EVENTS_TABLE,
     init_warehouse,
+    read_table,
 )
 
 EVENT_COLUMNS = [f.name for f in CF_AUDIT_EVENT.fields]
@@ -61,22 +71,25 @@ class ParquetStore:
 
     def __init__(self, spark: SparkSession, warehouse_dir: str) -> None:
         self.spark = spark
+        self.warehouse_dir = warehouse_dir
         self.paths = init_warehouse(spark, warehouse_dir)  # W5
 
     # -- reads ------------------------------------------------------------
 
-    def _read(self, path: str) -> DataFrame:
-        """Read a table, healing a crashed cursor-swap (rename pair) by
-        restoring the ``._old`` backup — the cursor then re-ships at most
-        one committed batch (at-least-once), never resets to epoch."""
+    def _read(self, table: str) -> DataFrame:
+        """Read a table with its pinned schema, healing a crashed
+        cursor-swap (rename pair) by restoring the ``._old`` backup — the
+        cursor then re-ships at most one committed batch (at-least-once),
+        never resets to epoch."""
+        path = self.paths[table]
         if not os.path.exists(path):
             old = path + "._old"
             if os.path.exists(old):
                 os.rename(old, path)
-        return self.spark.read.parquet(path)
+        return read_table(self.spark, self.warehouse_dir, table)
 
     def events_df(self) -> DataFrame:
-        return self._read(self.paths[EVENTS_TABLE])
+        return self._read(EVENTS_TABLE)
 
     def latest_event_time(self) -> dt.datetime:
         from paas_auditor_spark.functions.timecross import (
@@ -99,7 +112,7 @@ class ParquetStore:
             .filter(
                 F.col("created_at")
                 >= F.lit(wall_string(floor)).cast(
-                    self.events_df().schema["created_at"].dataType
+                    CF_AUDIT_EVENT["created_at"].dataType
                 )
             )
             .select("guid")
@@ -119,7 +132,7 @@ class ParquetStore:
     # -- cursor / ship ----------------------------------------------------
 
     def effective_cursor(self, name: str) -> tuple[dt.datetime, str]:
-        return _effective_cursor_df(self._read(self.paths[CURSORS_TABLE]), name)
+        return _effective_cursor_df(self._read(CURSORS_TABLE), name)
 
     def unshipped_events(self, name: str, cap: int) -> DataFrame:
         """The shipper CTE computed Spark-side: cursor resolved from the
@@ -133,7 +146,9 @@ class ParquetStore:
     ) -> None:
         """W2 on parquet: upsert the tiny state table, atomic dir swap."""
         path = self.paths[CURSORS_TABLE]
-        new_df = _upsert_cursor_df(self._read(path), name, updated_at, shipped_id)
+        new_df = _upsert_cursor_df(
+            self._read(CURSORS_TABLE), name, updated_at, shipped_id
+        )
         tmp = path + "._upsert"
         new_df.coalesce(1).write.mode("overwrite").parquet(tmp)
         old = path + "._old"

@@ -303,6 +303,24 @@ def test_metric_registry_names():
     assert set(m.values) == set(COUNTERS + GAUGES)
     m.inc("custom_sink_shipper_events_shipped_total", 3.0)
     assert m.get("custom_sink_shipper_events_shipped_total") == 3.0
+    # /metrics carries HELP and TYPE for every name: the reference names
+    # by their declared kind, lazily registered ones by the first call
+    # (``inc`` → counter, ``set`` → gauge)
+    m.set("custom_sink_shipper_latest_event_timestamp", 5.0)
+    m.inc("custom_sink_shipper_latest_event_timestamp")  # keeps its type
+    text = m.render_text()
+    assert text.endswith("\n")
+    lines = text.splitlines()
+    for name in COUNTERS + ("custom_sink_shipper_events_shipped_total",):
+        assert f"# TYPE {name} counter" in lines
+    for name in GAUGES + ("custom_sink_shipper_latest_event_timestamp",):
+        assert f"# TYPE {name} gauge" in lines
+    # a custom shipper's metric is documented like the reference's
+    assert (
+        "# HELP custom_sink_shipper_events_shipped_total"
+        " Events delivered to the sink." in lines
+    )
+    assert "custom_sink_shipper_latest_event_timestamp 6.0" in lines
 
 
 # --- idempotent append window bound (scale hard-part 1) -------------------

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 import urllib.request
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from paas_auditor_spark.runner import SHIPPER_NAME, Service
 from paas_auditor_spark.config import EngineConfig
@@ -105,8 +107,131 @@ def test_service_end_to_end(spark, tmp_path):
         ).read().decode()
         assert "cf_audit_event_collector_events_collected_total 5" in metrics
         assert "informer_cf_audit_events_total 5" in metrics
+        # Prometheus exposition: every sample follows its HELP and TYPE
+        lines = metrics.splitlines()
+        samples = [i for i, line in enumerate(lines) if line[0] != "#"]
+        assert len(samples) == 9 and len(lines) == 27
+        for i in samples:
+            name = lines[i].split()[0]
+            assert lines[i - 2].startswith(f"# HELP {name} ")
+            assert lines[i - 1].startswith(f"# TYPE {name} ")
+        assert (
+            "# TYPE cf_audit_event_collector_events_collected_total counter"
+            in lines
+        )
+        assert "# TYPE informer_cf_audit_events_total gauge" in lines
     finally:
         server.shutdown()
+
+
+def _tick_jobs(spark, svc: Service, kind: str) -> int:
+    """Run one ``kind`` tick under its own job group; its Spark job count."""
+    sc = spark.sparkContext
+    group = f"tick-{kind}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        getattr(svc, f"{kind}_tick")()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ticks_run_only_data_jobs_on_warm_warehouse(spark, tmp_path):
+    """Store reads pass the bootstrap's pinned schemas (no footer-inference
+    job) and the cursor row is a JVM literal (no Python-worker job), so a
+    tick's fixed cost is its data jobs: shipper = cursor collect, payload
+    collect, cursor write; informer = the watermark MAX."""
+    from paas_auditor_spark.operators.cursor import upsert_cursor
+    from paas_auditor_spark.schemas import SHIPPER_CURSOR
+
+    transport = PageServer(range(5))
+    sent: list[str] = []
+    cfg = EngineConfig()
+    cfg.pagination_wait_s = 0.0
+    svc = Service(
+        spark,
+        warehouse_dir=str(tmp_path / "wh"),
+        transport=transport,
+        sender=sent.append,
+        cfg=cfg,
+    )
+    svc.run_loops(max_ticks=1)  # warm: events stored, cursor committed
+    transport.ids = [3, 4, 5, 6]  # overlap re-read + two new events
+    jobs = {
+        kind: _tick_jobs(spark, svc, kind)
+        for kind in ("collector", "shipper", "informer")
+    }
+    assert svc.totals.collected == 7 and svc.totals.shipped == 7
+    assert 0 < jobs["shipper"] <= 3, jobs
+    assert 0 < jobs["informer"] <= 2, jobs
+    assert 0 < jobs["collector"] <= 8, jobs
+
+    cursors = spark.read.schema(SHIPPER_CURSOR).parquet(
+        svc.paths[CURSORS_TABLE]
+    )
+    upserted = upsert_cursor(cursors, SHIPPER_NAME, BASE, "g")
+    assert len(upserted.collect()) == 1
+    plan = upserted._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_mixed_layout_events_table_reads_pinned_schema(spark, tmp_path):
+    """An events table whose older files predate the ``metadata`` column:
+    the store reads all 13 columns whatever file a footer would name, and
+    the shipper emits ``null`` metadata for the old rows and the stored
+    JSON for the new ones.  The older writer also left a Parquet summary
+    file (``_common_metadata``), which footer inference prefers — so an
+    inferred read would drop ``metadata`` every time."""
+    import pyarrow.parquet as pq
+
+    from paas_auditor_spark.functions.timecross import epoch_utc
+    from paas_auditor_spark.schemas import CF_AUDIT_EVENT
+    from paas_auditor_spark.sources.bootstrap import EVENTS_TABLE
+    from paas_auditor_spark.stores import EVENT_COLUMNS
+
+    def events(lo: int, hi: int):
+        cols = {
+            "guid": F.format_string("00000000-0000-0000-0000-%012d", "id"),
+            "created_at": F.timestamp_seconds(
+                F.lit(int(epoch_utc(BASE))) + F.col("id")
+            ),
+            "metadata": F.format_string('{"request":"r%d"}', "id"),
+        }
+        n = F.col("id").cast("string")
+        return spark.range(lo, hi).select(
+            *(
+                cols.get(f.name, F.concat(F.lit(f"{f.name}-"), n))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in CF_AUDIT_EVENT.fields
+            )
+        )
+
+    path = str(tmp_path / "wh" / EVENTS_TABLE)
+    events(0, 3).drop("metadata").repartition(3).write.parquet(path)
+    first = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))[0]
+    pq.write_metadata(
+        pq.read_schema(os.path.join(path, first)),
+        os.path.join(path, "_common_metadata"),
+    )
+    events(3, 6).write.mode("append").parquet(path)
+
+    sent: list[str] = []
+    svc = Service(
+        spark, warehouse_dir=str(tmp_path / "wh"), sender=sent.append
+    )
+    assert svc.store.events_df().columns == EVENT_COLUMNS
+    assert svc.shipper_tick() == 6
+    got = {
+        e["guid"]: e["metadata"]
+        for e in (json.loads(p)["event"] for p in sent)
+    }
+    assert got == {
+        str(uuid.UUID(int=i)): {"request": f"r{i}"} if i >= 3 else None
+        for i in range(6)
+    }
 
 
 def test_service_shipper_failure_keeps_collector_alive(spark, tmp_path):
